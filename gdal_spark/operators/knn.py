@@ -6,7 +6,7 @@ candidates are found (alg/gdalgrid.cpp:905+, port/cpl_quad_tree.cpp:138-231);
 the refine metric is the spherical-law-of-cosines great-circle distance
 (ogr/ogr_geo_utils.cpp:25-46).
 
-Spark-first design, two strategies:
+Spark-first design, four strategies:
 
 * ``knn_join`` — queries are broadcast-small (the common shape: a probe set
   against a planetary point table). Each partition computes distances of its
@@ -23,8 +23,17 @@ Spark-first design, two strategies:
   within the ring radius — callers choose ring from data density, or use
   ``knn_join`` for exactness.
 
-Ties break by (distance, id) ascending — deterministic, matching the
-FIXTURES.md §6 oracle rule.
+* ``knn_cell_join_adaptive`` — the same cell join with the ring grown per
+  query in O(log max_ring) rounds, then one provably sufficient final
+  probe: exact without choosing a ring.
+
+* ``knn_hex_kring_join`` — the fixed-ring join on a flat axial hex grid.
+
+The cell strategies are plan shapes over one core: one pair of cell frames
+(``_cell_frames``), one candidate equi-join (``_candidates``), one exact
+metric (``_gc_dist_col``) and one top-k (``_partial_topk_batches`` +
+``_top_k``). Ties break by (distance, id) ascending — deterministic,
+matching the FIXTURES.md §6 oracle rule.
 """
 
 from __future__ import annotations
@@ -35,16 +44,23 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from gdal_spark.spatial import geometry as G
 from gdal_spark.spatial import tilemath as TM
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Rank (query_id, neighbor_id, dist_m) rows per query by (dist_m,
+    neighbor_id) and keep ranks 1..k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist_m").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "dist_m")
+    )
 
 
 def knn_join(
@@ -132,93 +148,7 @@ def knn_join(
         yield pd.DataFrame(rows)
 
     partial = points.mapInPandas(local_topk, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("neighbor_id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist_m")
-    )
-
-
-def knn_cell_join(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    zoom: int = 7,
-    ring: int = 1,
-    point_id: str = "i",
-    query_id: str = "query_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    include_self: bool = False,
-) -> DataFrame:
-    """Cell-bucketed approximate-window kNN (exact within ``ring`` rings).
-
-    Points carry (tx, ty) at ``zoom``; each query explodes to the
-    (2·ring+1)² neighbouring cells (k-ring expansion on the tile grid, the
-    quadkey analog of H3 k-ring), equi-joins, refines with the exact
-    great-circle metric, and window-top-k's.
-    """
-    ptx, pty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    pts = points.select(
-        F.col(point_id).alias("neighbor_id"),
-        F.col(lon).alias("_plon"),
-        F.col(lat).alias("_plat"),
-        ptx.alias("cell_tx"),
-        pty.alias("cell_ty"),
-    )
-    qtx, qty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    offsets = F.sequence(F.lit(-ring), F.lit(ring))
-    qry = (
-        queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col(lon).alias("_qlon"),
-            F.col(lat).alias("_qlat"),
-            qtx.alias("_qtx"),
-            qty.alias("_qty"),
-        )
-        .withColumn("_dx", F.explode(offsets))
-        .withColumn("_dy", F.explode(offsets))
-        .withColumn(
-            "cell_tx", F.pmod(F.col("_qtx") + F.col("_dx"), F.lit(1 << zoom))
-        )  # antimeridian wrap: tx is cyclic modulo 2^zoom
-        .withColumn("cell_ty", F.col("_qty") + F.col("_dy"))
-    )
-    # pmod wrap can alias probe cells when 2*ring+1 >= 2^zoom — dedup so a
-    # neighbor is joined at most once per query
-    qry = qry.dropDuplicates(["query_id", "cell_tx", "cell_ty"])
-    joined = qry.join(pts, on=["cell_tx", "cell_ty"], how="inner")
-    if not include_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    d2r = float(np.pi / 180.0)
-    dist = F.acos(
-        F.least(
-            F.lit(1.0),
-            F.greatest(
-                F.lit(-1.0),
-                F.sin(F.col("_qlat") * d2r) * F.sin(F.col("_plat") * d2r)
-                + F.cos(F.col("_qlat") * d2r)
-                * F.cos(F.col("_plat") * d2r)
-                * F.cos((F.col("_plon") - F.col("_qlon")) * d2r),
-            ),
-        )
-    ) * F.lit(G.EARTH_RADIUS)
-    # Map-side partial top-k BEFORE the rank shuffle: the global top-k under
-    # the TOTAL order (dist, neighbor_id) equals the top-k of per-batch
-    # top-k's, so the window's shuffle carries ≤ batches × queries × k rows
-    # instead of the full join output (queries × candidates).
-    cand = joined.withColumn("dist_m", dist).select(
-        "query_id", "neighbor_id", "dist_m"
-    )
-    partial = _partial_topk_batches(cand, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist_m")
-    )
+    return _top_k(partial, k)
 
 
 def _partial_topk_batches(cand: DataFrame, k: int) -> DataFrame:
@@ -268,6 +198,106 @@ def _gc_dist_col() -> "F.Column":
     ) * F.lit(G.EARTH_RADIUS)
 
 
+def _tile_cells(lon_col, lat_col, zoom: int):
+    """Cell columns of the quadkey strategies: the XYZ tile at ``zoom``
+    with tx wrapped modulo 2^zoom (lon -180 is tile column 2^zoom - 1, as
+    lon 180) and ty clamped into the grid (rows beyond the Mercator limit
+    join the edge row), so every point sits in a cell the ring probe can
+    reach."""
+    n_cells = 1 << zoom
+    tx, ty = TM.lonlat_to_tile(lon_col, lat_col, zoom)
+    return (
+        F.pmod(tx, F.lit(n_cells)),
+        F.least(F.greatest(ty, F.lit(0)), F.lit(n_cells - 1)),
+    )
+
+
+def _cell_frames(points, queries, point_id, query_id, lon, lat, cx, cy):
+    """The bucketed point side (neighbor_id, _plon, _plat, cell_x, cell_y)
+    and the query side (query_id, _qlon, _qlat, _qx, _qy), both keyed by
+    the same cell columns (cx, cy) over ``lon``/``lat``."""
+    pts = points.select(
+        F.col(point_id).alias("neighbor_id"),
+        F.col(lon).alias("_plon"),
+        F.col(lat).alias("_plat"),
+        cx.alias("cell_x"),
+        cy.alias("cell_y"),
+    )
+    qry = queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(lon).alias("_qlon"),
+        F.col(lat).alias("_qlat"),
+        cx.alias("_qx"),
+        cy.alias("_qy"),
+    )
+    return pts, qry
+
+
+def _ring_probe(qry: DataFrame, rx, ry, inner, n_cells: int) -> DataFrame:
+    """Explode each query to the tile cells (_qx+dx, _qy+dy) with |dx| <= rx,
+    |dy| <= ry and Chebyshev ring max(|dx|, |dy|) > ``inner`` (all Column
+    expressions). tx wraps at the antimeridian (pmod), ty outside the grid
+    is dropped, and cells the wrap aliases (2·r+1 >= 2^zoom) are deduped so
+    a neighbour is joined at most once per query."""
+    return (
+        qry.withColumn("_dx", F.explode(F.sequence(-rx, rx)))
+        .withColumn("_dy", F.explode(F.sequence(-ry, ry)))
+        .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) > inner)
+        .withColumn("cell_x", F.pmod(F.col("_qx") + F.col("_dx"), F.lit(n_cells)))
+        .withColumn("cell_y", F.col("_qy") + F.col("_dy"))
+        .filter((F.col("cell_y") >= 0) & (F.col("cell_y") < n_cells))
+        .dropDuplicates(["query_id", "cell_x", "cell_y"])
+        .select("query_id", "_qlon", "_qlat", "cell_x", "cell_y")
+    )
+
+
+def _candidates(probe: DataFrame, pts: DataFrame, include_self: bool) -> DataFrame:
+    """(query, neighbour) pairs sharing a probed cell, with both positions."""
+    cand = probe.join(pts, on=["cell_x", "cell_y"], how="inner").select(
+        "query_id", "_qlon", "_qlat", "neighbor_id", "_plon", "_plat"
+    )
+    if not include_self:
+        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
+    return cand
+
+
+def _refine_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Exact distance, then a map-side partial top-k BEFORE the rank
+    shuffle: the global top-k under the TOTAL order (dist, neighbor_id)
+    equals the top-k of per-batch top-k's, so the window's shuffle carries
+    ≤ batches × queries × k rows instead of the full candidate set."""
+    dist = cand.select("query_id", "neighbor_id", _gc_dist_col().alias("dist_m"))
+    return _top_k(_partial_topk_batches(dist, k), k)
+
+
+def knn_cell_join(
+    points: DataFrame,
+    queries: DataFrame,
+    k: int,
+    zoom: int = 7,
+    ring: int = 1,
+    point_id: str = "i",
+    query_id: str = "query_id",
+    lon: str = "lon",
+    lat: str = "lat",
+    include_self: bool = False,
+) -> DataFrame:
+    """Cell-bucketed approximate-window kNN (exact within ``ring`` rings).
+
+    Points carry (tx, ty) at ``zoom``; each query explodes to the
+    (2·ring+1)² neighbouring cells (k-ring expansion on the tile grid, the
+    quadkey analog of H3 k-ring), equi-joins, refines with the exact
+    great-circle metric, and window-top-k's.
+    """
+    pts, qry = _cell_frames(
+        points, queries, point_id, query_id, lon, lat,
+        *_tile_cells(F.col(lon), F.col(lat), zoom),
+    )
+    r = F.lit(ring)
+    probe = _ring_probe(qry, r, r, F.lit(-1), 1 << zoom)
+    return _refine_top_k(_candidates(probe, pts, include_self), k)
+
+
 _MAXLAT_RAD = float(np.radians(85.05112878))  # WebMercator latitude limit
 
 
@@ -312,197 +342,125 @@ def knn_cell_join_adaptive(
       returns them with a boolean ``exact`` column (False for capped
       queries, True otherwise — the column is always present in flag mode
       so the schema is deterministic).
+
+    The rounds' intermediate frames are persisted for the call only; the
+    returned frame is local-checkpointed and is the only storage left.
     """
     if on_capped not in ("error", "flag"):
         raise ValueError("on_capped must be 'error' or 'flag'")
-    spark = points.sparkSession
-    out_cols = ["query_id", "neighbor_id", "rank", "dist_m"]
     n_cells = 1 << zoom
     cell_m = 2.0 * TM.ORIGIN_SHIFT / n_cells  # Mercator meters per cell
+    held: list[DataFrame] = []
 
-    ptx, pty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    pts = points.select(
-        F.col(point_id).alias("neighbor_id"),
-        F.col(lon).alias("_plon"),
-        F.col(lat).alias("_plat"),
-        ptx.alias("cell_tx"),
-        pty.alias("cell_ty"),
-    ).persist()
-    qtx, qty = TM.lonlat_to_tile(F.col(lon), F.col(lat), zoom)
-    todo = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(lon).alias("_qlon"),
-        F.col(lat).alias("_qlat"),
-        qtx.alias("_qtx"),
-        qty.alias("_qty"),
-    ).persist()
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
 
-    def _probe_cells(q: DataFrame, lo_col, hi_col) -> DataFrame:
-        """Explode q to its cells with Chebyshev ring in [lo, hi]; tx wraps
-        at the antimeridian (pmod), ty outside the grid is dropped, and
-        wrap-aliased cells are deduped per query."""
-        return (
-            q.withColumn("_dx", F.explode(F.sequence(-hi_col, hi_col)))
-            .withColumn("_dy", F.explode(F.sequence(-hi_col, hi_col)))
-            .filter(F.greatest(F.abs("_dx"), F.abs("_dy")) >= lo_col)
-            .withColumn(
-                "cell_tx", F.pmod(F.col("_qtx") + F.col("_dx"), F.lit(n_cells))
-            )
-            .withColumn("cell_ty", F.col("_qty") + F.col("_dy"))
-            .filter(
-                (F.col("cell_ty") >= 0) & (F.col("cell_ty") < n_cells)
-            )
-            .dropDuplicates(["query_id", "cell_tx", "cell_ty"])
-            .select("query_id", "_qlon", "_qlat", "cell_tx", "cell_ty")
+    try:
+        pts, todo = _cell_frames(
+            points, queries, point_id, query_id, lon, lat,
+            *_tile_cells(F.col(lon), F.col(lat), zoom),
         )
-
-    def _found(probe: DataFrame) -> DataFrame:
-        f = probe.join(pts, on=["cell_tx", "cell_ty"], how="inner").select(
-            "query_id", "_qlon", "_qlat", "neighbor_id", "_plon", "_plat"
-        )
-        if not include_self:
-            f = f.filter(F.col("neighbor_id") != F.col("query_id"))
-        return f
-
-    collected = None
-    done_parts: list[DataFrame] = []
-    lo, hi = 0, 1
-    n_todo = todo.count()
-    while n_todo > 0 and lo <= max_ring:
-        hi = min(hi, max_ring)
-        probe = _probe_cells(todo, F.lit(lo), F.lit(hi))
-        found = _found(probe)
-        collected = found if collected is None else collected.unionAll(found)
-        # localCheckpoint truncates the growing union lineage (few batches,
-        # but each references the previous union)
-        collected = collected.localCheckpoint(eager=True)
-        counts = (
-            collected.dropDuplicates(["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("_n"))
-        )
-        merged = todo.join(counts, "query_id", "left").withColumn(
-            "_probed", F.lit(hi)
-        )
-        newly_done = merged.filter(F.coalesce("_n", F.lit(0)) >= k).drop("_n")
-        done_parts.append(newly_done.localCheckpoint(eager=True))
-        new_todo = (
-            merged.filter(F.coalesce("_n", F.lit(0)) < k)
-            .drop("_n", "_probed")
-            .localCheckpoint(eager=True)
-        )
-        todo.unpersist()
-        todo = new_todo.persist()
+        pts, todo = hold(pts), hold(todo)
+        collected = None
+        done_parts: list[DataFrame] = []
+        lo, hi = 0, 1
         n_todo = todo.count()
-        lo, hi = hi + 1, hi * 2 + 1
+        while n_todo > 0 and lo <= max_ring:
+            hi = min(hi, max_ring)
+            probe = _ring_probe(todo, F.lit(hi), F.lit(hi), F.lit(lo - 1), n_cells)
+            found = _candidates(probe, pts, include_self)
+            collected = hold(found if collected is None else collected.unionAll(found))
+            counts = (
+                collected.dropDuplicates(["query_id", "neighbor_id"])
+                .groupBy("query_id")
+                .agg(F.count(F.lit(1)).alias("_n"))
+            )
+            merged = todo.join(counts, "query_id", "left").withColumn(
+                "_probed", F.lit(hi)
+            )
+            done_parts.append(
+                merged.filter(F.coalesce("_n", F.lit(0)) >= k).drop("_n")
+            )
+            todo = hold(
+                merged.filter(F.coalesce("_n", F.lit(0)) < k).drop("_n", "_probed")
+            )
+            n_todo = todo.count()
+            lo, hi = hi + 1, hi * 2 + 1
 
-    if collected is None:  # empty query set
-        pts.unpersist()
-        todo.unpersist()
-        fields = [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("rank", LongType()),
-            StructField("dist_m", DoubleType()),
-        ]
-        if on_capped == "flag":
-            fields.append(StructField("exact", BooleanType()))
-        return spark.createDataFrame([], StructType(fields))
+        if collected is None:  # empty query set
+            schema = "query_id long, neighbor_id long, rank long, dist_m double"
+            if on_capped == "flag":
+                schema += ", exact boolean"
+            return points.sparkSession.createDataFrame([], schema)
 
-    # stragglers that hit the max_ring cap have no phase-2 exactness bound:
-    # raise (default) or mark them, never return silent best-effort rows
-    capped = None
-    if n_todo > 0:
-        if on_capped == "error":
-            pts.unpersist()
-            todo.unpersist()
+        # stragglers that hit the max_ring cap have no phase-2 exactness
+        # bound: raise (default) or mark them, never return silent
+        # best-effort rows
+        if n_todo > 0 and on_capped == "error":
             raise RuntimeError(
                 f"{n_todo} queries did not reach k={k} candidates within "
                 f"max_ring={max_ring}; their results would be best-effort. "
                 "Raise max_ring/lower zoom, or pass on_capped='flag' to get "
                 "them with exact=false."
             )
-        capped = (
-            todo.select("query_id")
-            .withColumn("_capped", F.lit(True))
-            .localCheckpoint(eager=True)
-        )
-    qstate = todo.withColumn("_probed", F.lit(min(max(hi // 2, 1), max_ring)))
-    for part in done_parts:
-        qstate = qstate.unionByName(part)
+        qstate = todo.withColumn("_probed", F.lit(min(max(hi // 2, 1), max_ring)))
+        for part in done_parts:
+            qstate = qstate.unionByName(part)
 
-    # ---- phase 2: probe the d_k-derived rectangle beyond the probed square
-    dedup = collected.dropDuplicates(["query_id", "neighbor_id"])
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col("neighbor_id").asc()
-    )
-    dk = (
-        dedup.withColumn("dist_m", _gc_dist_col())
-        .withColumn("rank", F.row_number().over(wv))
-        .filter(F.col("rank") == k)
-        .select("query_id", F.col("dist_m").alias("_dk"))
-    )
-    re_ = G.EARTH_RADIUS
-    phi = F.radians(F.col("_qlat"))
-    dphi = F.col("_dk") / F.lit(re_)
-    y_of = lambda p: F.lit(re_) * F.log(
-        F.tan(F.lit(float(np.pi / 4.0)) + p / 2.0)
-    )
-    phi_hi = F.least(phi + dphi, F.lit(_MAXLAT_RAD))
-    phi_lo = F.greatest(phi - dphi, F.lit(-_MAXLAT_RAD))
-    dy_max = F.greatest(y_of(phi_hi) - y_of(phi), y_of(phi) - y_of(phi_lo))
-    cos_max = F.cos(F.least(F.abs(phi) + dphi, F.lit(_MAXLAT_RAD)))
-    dlam = 2.0 * F.asin(
-        F.least(F.lit(1.0), F.sin(F.col("_dk") / F.lit(2.0 * re_)) / cos_max)
-    )
-    dx_merc = F.lit(re_) * dlam
-    r_y = (F.ceil(dy_max / F.lit(cell_m)) + 1).cast("int")
-    r_x = F.least(
-        (F.ceil(dx_merc / F.lit(cell_m)) + 1).cast("int"),
-        F.lit(n_cells // 2),  # x wraps: half the world covers every cell
-    )
-    ext = (
-        qstate.join(dk, "query_id", "inner")
-        .withColumn("_r", F.greatest(r_x, r_y))
-        .filter(F.col("_r") > F.col("_probed"))
-    )
-    probe2 = (
-        ext.withColumn("_dx", F.explode(F.sequence(-r_x, r_x)))
-        .withColumn("_dy", F.explode(F.sequence(-r_y, r_y)))
-        .filter(
-            F.greatest(F.abs("_dx"), F.abs("_dy")) > F.col("_probed")
+        # ---- phase 2: probe the d_k-derived rectangle beyond the probed square
+        dk = (
+            _top_k(
+                collected.dropDuplicates(["query_id", "neighbor_id"])
+                .withColumn("dist_m", _gc_dist_col()),
+                k,
+            )
+            .filter(F.col("rank") == k)
+            .select("query_id", F.col("dist_m").alias("_dk"))
         )
-        .withColumn(
-            "cell_tx", F.pmod(F.col("_qtx") + F.col("_dx"), F.lit(n_cells))
+        re_ = G.EARTH_RADIUS
+        phi = F.radians(F.col("_qlat"))
+        dphi = F.col("_dk") / F.lit(re_)
+        y_of = lambda p: F.lit(re_) * F.log(
+            F.tan(F.lit(float(np.pi / 4.0)) + p / 2.0)
         )
-        .withColumn("cell_ty", F.col("_qty") + F.col("_dy"))
-        .filter((F.col("cell_ty") >= 0) & (F.col("cell_ty") < n_cells))
-        .dropDuplicates(["query_id", "cell_tx", "cell_ty"])
-        .select("query_id", "_qlon", "_qlat", "cell_tx", "cell_ty")
-    )
-    collected = collected.unionAll(_found(probe2))
-
-    out = (
-        collected.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("dist_m", _gc_dist_col())
-        .withColumn("rank", F.row_number().over(wv))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
-    )
-    if on_capped == "flag":
-        if capped is not None:
+        phi_hi = F.least(phi + dphi, F.lit(_MAXLAT_RAD))
+        phi_lo = F.greatest(phi - dphi, F.lit(-_MAXLAT_RAD))
+        dy_max = F.greatest(y_of(phi_hi) - y_of(phi), y_of(phi) - y_of(phi_lo))
+        cos_max = F.cos(F.least(F.abs(phi) + dphi, F.lit(_MAXLAT_RAD)))
+        dlam = 2.0 * F.asin(
+            F.least(F.lit(1.0), F.sin(F.col("_dk") / F.lit(2.0 * re_)) / cos_max)
+        )
+        dx_merc = F.lit(re_) * dlam
+        r_y = (F.ceil(dy_max / F.lit(cell_m)) + 1).cast("int")
+        r_x = F.least(
+            (F.ceil(dx_merc / F.lit(cell_m)) + 1).cast("int"),
+            F.lit(n_cells // 2),  # x wraps: half the world covers every cell
+        )
+        ext = qstate.join(dk, "query_id", "inner").filter(
+            F.greatest(r_x, r_y) > F.col("_probed")
+        )
+        found = _candidates(
+            _ring_probe(ext, r_x, r_y, F.col("_probed"), n_cells), pts, include_self
+        )
+        out = _top_k(
+            collected.unionAll(found)
+            .dropDuplicates(["query_id", "neighbor_id"])
+            .withColumn("dist_m", _gc_dist_col()),
+            k,
+        )
+        if on_capped == "flag":
+            capped = todo.select("query_id").withColumn("_capped", F.lit(True))
             out = (
                 out.join(F.broadcast(capped), "query_id", "left")
                 .withColumn("exact", F.col("_capped").isNull())
                 .drop("_capped")
             )
-        else:
-            out = out.withColumn("exact", F.lit(True))
-    # materialize before unpersisting the inputs the plan references
-    out = out.localCheckpoint(eager=True)
-    pts.unpersist()
-    todo.unpersist()
-    return out
+        # materialize before releasing the frames the plan references
+        return out.localCheckpoint(eager=True)
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def _hex_axial_cells(lon_col, lat_col, size: float):
@@ -542,83 +500,19 @@ def knn_hex_kring_join(
     With ``ring`` covering the populated grid the result is exact (the
     demo gate's contract, like the zoom-2 quadkey variant); production
     sizes trade ring radius for recall."""
-    from pyspark.sql import Window
-
-    pq, pr = _hex_axial_cells(F.col("lon"), F.col("lat"), size)
-    base = points.select(
-        F.col(point_id).alias("neighbor_id"),
-        F.col("lon").alias("_plon"), F.col("lat").alias("_plat"),
-        pq.alias("_cq"), pr.alias("_cr"),
-    )
-    qq, qr = _hex_axial_cells(F.col("lon"), F.col("lat"), size)
-    qc = queries.select(
-        "query_id",
-        F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"),
-        qq.alias("_q0"), qr.alias("_r0"),
+    pts, qry = _cell_frames(
+        points, queries, point_id, "query_id", "lon", "lat",
+        *_hex_axial_cells(F.col("lon"), F.col("lat"), size),
     )
     probe = (
-        qc.withColumn("_dq", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
+        qry.withColumn("_dq", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
         .withColumn("_dr", F.explode(F.sequence(
             F.greatest(F.lit(-ring), -F.col("_dq") - ring),
             F.least(F.lit(ring), -F.col("_dq") + ring))))
         .select(
             "query_id", "_qlon", "_qlat",
-            (F.col("_q0") + F.col("_dq")).alias("_cq"),
-            (F.col("_r0") + F.col("_dr")).alias("_cr"),
+            (F.col("_qx") + F.col("_dq")).alias("cell_x"),
+            (F.col("_qy") + F.col("_dr")).alias("cell_y"),
         )
     )
-    cand = probe.join(base, on=["_cq", "_cr"]).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    wd = cand.withColumn("dist_m", _gc_dist_col()).select(
-        "query_id", "neighbor_id", "dist_m")
-
-    # Per-partition top-k PRE-REDUCTION before the per-query window: the
-    # exhaustive ring join emits (queries x points) candidates, and
-    # shuffling all of them into the window costs more than the join
-    # itself.  An Arrow-batched per-partition selection keeps only
-    # (queries x k) rows per partition — identical (dist, neighbor_id)
-    # order, so the final window sees bit-identical survivors; the
-    # global shuffle shrinks from |candidates| to (#partitions x k x
-    # #queries), the same two-level shape as the engine's CC and rank
-    # reductions.
-    import numpy as np
-    import pandas as pd
-
-    kk = int(k)
-
-    def _prereduce(batches):
-        acc: dict = {}
-        for pdf in batches:
-            for qid, g in pdf.groupby("query_id", sort=False):
-                arr = g[["neighbor_id", "dist_m"]].to_numpy(dtype=np.float64)
-                prev = acc.get(qid)
-                if prev is not None:
-                    arr = np.vstack([prev, arr])
-                if arr.shape[0] > kk:
-                    idx = np.lexsort((arr[:, 0], arr[:, 1]))[:kk]
-                    arr = arr[idx]
-                acc[qid] = arr
-        if not acc:
-            yield pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int64"),
-                 "neighbor_id": pd.Series([], dtype="int64"),
-                 "dist_m": pd.Series([], dtype="float64")})
-            return
-        qids = np.concatenate(
-            [np.full(a.shape[0], q, dtype=np.int64) for q, a in acc.items()])
-        mat = np.vstack(list(acc.values()))
-        yield pd.DataFrame(
-            {"query_id": qids,
-             "neighbor_id": mat[:, 0].astype(np.int64),
-             "dist_m": mat[:, 1]})
-
-    red = wd.mapInPandas(
-        _prereduce, schema="query_id long, neighbor_id long, dist_m double")
-    wv = Window.partitionBy("query_id").orderBy(
-        F.asc("dist_m"), F.asc("neighbor_id"))
-    return (
-        red.withColumn("rank", F.row_number().over(wv))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist_m")
-    )
+    return _refine_top_k(_candidates(probe, pts, include_self=False), k)

@@ -204,11 +204,10 @@ def q_pip_broadcast(spark, sf_dir):
 def q_pip_cells_salted(spark, sf_dir):
     """Cell-cover equi-join PIP with salt=4 on the distributed-cover shuffle
     path — identical output to pip_broadcast, different physical plan."""
-    out = PIP.pip_join_cells(
+    return PIP.pip_join_cells(
         order_points(spark, sf_dir), polygons_df(spark), zoom=7, salt=4,
-        broadcast_cover=False,
-    )
-    return out.groupBy("o_orderkey").agg(F.min("poly_id").alias("poly_id"))
+        first_match=True, broadcast_cover=False,
+    ).select("o_orderkey", "poly_id")
 
 
 @register(
@@ -258,29 +257,29 @@ SELECT query_id, neighbor_id, rk AS "rank", {SR('dist', 3)} AS dist_m
 FROM r WHERE rk <= {KNN_K}"""
 
 
-@register("knn_exact", _knn_oracle())
-def q_knn_exact(spark, sf_dir):
-    """Exact kNN: broadcast queries, partition-local top-k, window refine."""
+def _knn_gate(spark, sf_dir, knn, **kw):
+    """Run one kNN strategy on the shared gate query set (every order whose
+    key matches KNN_PRED, against all order points) with the oracle's
+    3-decimal distance rounding."""
     pts = order_points(spark, sf_dir)
     queries = pts.filter(F.expr(KNN_PRED)).select(
         F.col("o_orderkey").alias("query_id"), "lon", "lat"
     )
-    out = KNN.knn_join(pts, queries, k=KNN_K, point_id="o_orderkey")
+    out = knn(pts, queries, k=KNN_K, point_id="o_orderkey", **kw)
     return out.withColumn("dist_m", R("dist_m", 3))
+
+
+@register("knn_exact", _knn_oracle())
+def q_knn_exact(spark, sf_dir):
+    """Exact kNN: broadcast queries, partition-local top-k, window refine."""
+    return _knn_gate(spark, sf_dir, KNN.knn_join)
 
 
 @register("knn_cells", _knn_oracle())
 def q_knn_cells(spark, sf_dir):
     """Cell k-ring kNN (quadkey k-ring ≈ H3 k-ring). zoom=2/ring=2 covers the
     whole 4×4 tile matrix → exact, same oracle; higher zooms trade recall."""
-    pts = order_points(spark, sf_dir)
-    queries = pts.filter(F.expr(KNN_PRED)).select(
-        F.col("o_orderkey").alias("query_id"), "lon", "lat"
-    )
-    out = KNN.knn_cell_join(
-        pts, queries, k=KNN_K, zoom=2, ring=2, point_id="o_orderkey"
-    )
-    return out.withColumn("dist_m", R("dist_m", 3))
+    return _knn_gate(spark, sf_dir, KNN.knn_cell_join, zoom=2, ring=2)
 
 
 from gdal_spark.spatial import crs as CRS  # noqa: E402
@@ -503,14 +502,7 @@ def q_knn_cells_z7(spark, sf_dir):
     the whole matrix and demonstrates the exhaustive fallback). Exact on the
     fixture at sf0.001 AND sf0.01 (verified against brute force for k=5);
     shares the exact-kNN oracle."""
-    pts = order_points(spark, sf_dir)
-    queries = pts.filter(F.expr(KNN_PRED)).select(
-        F.col("o_orderkey").alias("query_id"), "lon", "lat"
-    )
-    out = KNN.knn_cell_join(
-        pts, queries, k=KNN_K, zoom=7, ring=3, point_id="o_orderkey"
-    )
-    return out.withColumn("dist_m", R("dist_m", 3))
+    return _knn_gate(spark, sf_dir, KNN.knn_cell_join, zoom=7, ring=3)
 
 
 # --- raster sampling -------------------------------------------------------
@@ -1652,14 +1644,9 @@ def q_knn_adaptive(spark, sf_dir):
     """Expanding k-ring kNN (the reference's expanding quadtree window,
     gdalgrid.cpp:905+) — exact against the same oracle as knn_exact: rings
     grow per query until k candidates plus a Mercator-aware safety margin."""
-    pts = order_points(spark, sf_dir)
-    queries = pts.filter(F.expr(KNN_PRED)).select(
-        F.col("o_orderkey").alias("query_id"), "lon", "lat"
+    return _knn_gate(
+        spark, sf_dir, KNN.knn_cell_join_adaptive, zoom=4, max_ring=64
     )
-    out = KNN.knn_cell_join_adaptive(
-        pts, queries, k=KNN_K, zoom=4, max_ring=64, point_id="o_orderkey"
-    )
-    return out.withColumn("dist_m", R("dist_m", 3))
 
 
 Z_HILBERT = 8
@@ -13324,13 +13311,7 @@ def q_knn_hex_kring(spark, sf_dir):
     whole populated grid at this size, so the result is exact — the same
     demo contract as the zoom-2 quadkey variant), ONE cell equi-join,
     exact great-circle refine with (dist, neighbor_id) tie-break."""
-    pts = order_points(spark, sf_dir)
-    queries = pts.filter(F.expr(KNN_PRED)).select(
-        F.col("o_orderkey").alias("query_id"), "lon", "lat"
-    )
-    out = KNN.knn_hex_kring_join(
-        pts, queries, k=KNN_K, ring=14, size=30.0, point_id="o_orderkey")
-    return out.withColumn("dist_m", R("dist_m", 3))
+    return _knn_gate(spark, sf_dir, KNN.knn_hex_kring_join, ring=14, size=30.0)
 
 
 # ===========================================================================

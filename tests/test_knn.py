@@ -195,3 +195,49 @@ def test_adaptive_knn_capped_raises_or_flags(spark):
         pts, queries, k=2, zoom=2, max_ring=8, on_capped="flag"
     ).collect()
     assert len(ok) == 2 and all(r["exact"] is True for r in ok)
+
+
+def test_cell_strategies_keep_ids_above_2_53(spark):
+    """Ids above 2^53 have no exact float64 form; every cell strategy must
+    return the input ids untouched and equal exact kNN. Two points sit on
+    the antimeridian (lon -180 and 180), which the cell grids must wrap."""
+    base = 2 ** 53 + 1
+    rng = np.random.default_rng(11)
+    lon = rng.uniform(-180.0, 180.0, 40)
+    lat = rng.uniform(-60.0, 60.0, 40)
+    lon[:2] = [-180.0, 180.0]
+    rows = [(base + 2 * i, float(lon[i]), float(lat[i])) for i in range(40)]
+    ids = {r[0] for r in rows}
+    pts = spark.createDataFrame(rows, "i long, lon double, lat double")
+    queries = pts.filter(F.col("i") < base + 20).select(
+        F.col("i").alias("query_id"), "lon", "lat"
+    )
+
+    def ranks(df):
+        return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
+
+    exact = ranks(K.knn_join(pts, queries, k=3))
+    assert len(exact) == 30
+    for name, out in (
+        ("cells", K.knn_cell_join(pts, queries, k=3, zoom=1, ring=1)),
+        ("hex", K.knn_hex_kring_join(pts, queries, k=3, ring=14, size=30.0,
+                                     point_id="i")),
+        ("adaptive", K.knn_cell_join_adaptive(pts, queries, k=3, zoom=4)),
+    ):
+        got = ranks(out)
+        assert set(got.values()) <= ids, name
+        assert got == exact, name
+
+
+def test_adaptive_knn_releases_persisted_rdds(spark):
+    """The adaptive rounds persist intermediate frames; after the call only
+    the returned frame's own checkpoint may remain."""
+    points = P.pages_df(spark, 1500).select("i", "lon", "lat")
+    queries = points.filter(F.col("i").isin([0, 1, 777])).select(
+        F.col("i").alias("query_id"), "lon", "lat"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = K.knn_cell_join_adaptive(points, queries, k=4, zoom=4)
+    assert jsc.getPersistentRDDs().size() <= before + 1
+    assert out.count() == 12

@@ -64,11 +64,14 @@ def test_cell_pip_join_salted_matches_oracle(fixtures, expected):
     pts, polys = fixtures
     got = {
         (r["i"], r["poly_id"])
-        for r in PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
+        for r in PJ.pip_join_cells(pts, polys, zoom=6, salt=4, broadcast_cover=False)
         .select("i", "poly_id")
         .collect()
     }
     assert got == expected
+    # a broadcast cover has no shuffle partition to salt: refused up front
+    with pytest.raises(ValueError, match="broadcast_cover=False"):
+        PJ.pip_join_cells(pts, polys, zoom=6, salt=4)
 
 
 def test_left_join_keeps_unmatched(fixtures, expected):
@@ -168,3 +171,90 @@ def test_strtree_blocks_cover_all_entries(spark):
             pid = int(idx.poly_ids[k])
             ref[i] = min(ref.get(i, pid), pid)
     assert dict(zip(got_pt.tolist(), got_poly.tolist())) == ref
+
+
+# Adversarial points shared by every PIP plan: boundary cases first, then
+# seeded random points over the polygon layers' extent.
+_ADVERSARIAL = [
+    (-6.00003, 42.00003),   # ring vertex (mosaic cell 0)
+    (-5.00003, 42.00003),   # edge midpoint (mosaic cell 0)
+    (43.0, 43.0),           # hole interior (polygon with a hole)
+    (-17.0, 13.0),          # hole interior (multipolygon part)
+    (18.0, 44.0),           # between the two parts of multipolygon 2000
+    (float("nan"), 45.0),   # NaN lon
+    (None, 45.0),           # null lon
+    (2.0, None),            # null lat
+    (180.0, 45.0), (-180.0, 45.0),
+    (2.0, 89.9), (2.0, -89.9),
+]
+
+_PIP_PLANS = {
+    "broadcast": lambda pts, polys, fm: PJ.pip_join(pts, polys, first_match=fm),
+    "cells": lambda pts, polys, fm: PJ.pip_join_cells(
+        pts, polys, zoom=6, first_match=fm),
+    "cells_salted": lambda pts, polys, fm: PJ.pip_join_cells(
+        pts, polys, zoom=6, salt=4, broadcast_cover=False, first_match=fm),
+    "compact": lambda pts, polys, fm: PJ.pip_join_cells_compact(
+        pts, polys, zoom=6, first_match=fm),
+}
+
+
+@pytest.fixture(scope="module")
+def adversarial_points(spark):
+    rng = np.random.default_rng(20)
+    coords = _ADVERSARIAL + list(zip(
+        rng.uniform(-35.0, 50.0, 3000).tolist(),
+        rng.uniform(5.0, 60.0, 3000).tolist(),
+    ))
+    rows = [(i, lon, lat) for i, (lon, lat) in enumerate(coords)]
+    return rows, spark.createDataFrame(rows, "i long, lon double, lat double")
+
+
+def _pip_oracle(rows, features, first_match):
+    """(i, poly_id) pairs by brute force over every feature part; a point
+    with a missing or NaN coordinate matches nothing."""
+    ok = [r for r in rows
+          if r[1] is not None and r[2] is not None
+          and not (np.isnan(r[1]) or np.isnan(r[2]))]
+    ids = np.array([r[0] for r in ok])
+    px = np.array([r[1] for r in ok])
+    py = np.array([r[2] for r in ok])
+    pairs = set()
+    for pid, parts in features:
+        inside = np.zeros(px.shape[0], dtype=bool)
+        for rings in parts:
+            inside |= G.points_in_polygon(px, py, rings)
+        pairs.update((int(i), pid) for i in ids[inside])
+    if first_match:
+        best = {}
+        for i, pid in pairs:
+            best[i] = min(best.get(i, pid), pid)
+        pairs = set(best.items())
+    return pairs
+
+
+@pytest.mark.parametrize("layer", ["polygons", "multipolygons"])
+@pytest.mark.parametrize("first_match", [False, True])
+def test_all_pip_plans_agree_on_adversarial_points(
+    spark, adversarial_points, layer, first_match
+):
+    """Broadcast, cell (broadcast cover), salted shuffle-cover and compact
+    plans all equal one brute-force oracle on vertices, edges, holes,
+    multipolygon gaps, NaN/null coordinates, ±180 lon and ±89.9 lat."""
+    rows, pts = adversarial_points
+    if layer == "polygons":
+        polys = P.polygons_df(spark)
+        features = [(r["poly_id"], [[np.asarray(x) for x in r["rings"]]])
+                    for r in P.polygon_records()]
+    else:
+        polys = P.multipolygons_df(spark)
+        features = [(r["poly_id"], [[np.asarray(x) for x in part] for part in r["rings"]])
+                    for r in P.multipolygon_records()]
+    want = _pip_oracle(rows, features, first_match)
+    assert len(want) >= 20  # the layer is actually hit
+    for name, plan in _PIP_PLANS.items():
+        got = {
+            (r["i"], r["poly_id"])
+            for r in plan(pts, polys, first_match).select("i", "poly_id").collect()
+        }
+        assert got == want, name
